@@ -42,6 +42,9 @@ class Manifest:
     seen_count: int
     lineage: list[dict] = field(default_factory=list)
     waves_done: list[int] = field(default_factory=list)
+    # n_buckets / bloom_bits / cuckoo_rows the seen-set state was built
+    # with; None in manifests written before they were recorded
+    seen_params: dict | None = None
 
 
 def manifest_path(checkpoint_dir: str) -> str:

@@ -54,6 +54,9 @@ FRONTIER_COLS = [
 ]
 
 DISCOVERED_PRIORITY = 2  # outlinks rank below explicit seeds by default
+# waves up to this many scheduled URLs broadcast into the fetch join;
+# larger ones take a plain shuffled join
+BROADCAST_FETCH_MAX = 4_000_000
 
 
 @dataclass
@@ -97,7 +100,6 @@ class CrawlEngine:
         wave_ms: int = 1_000,
         max_depth: int = 3,
         verbose: bool = False,
-        broadcast_fetch_max: int = 4_000_000,
         max_attempts: int = 1,
         politeness_salt: int = 0,
         rank_priorities: bool = False,
@@ -105,7 +107,6 @@ class CrawlEngine:
         rank_bands: int = 4,
         rank_method: str = "pagerank",
         trap_guard: bool = False,
-        trap_min_urls: int = 20,
         trap_thresholds: dict | None = None,
         mirror_guard: bool = False,
         mirror_thresholds: dict | None = None,
@@ -127,12 +128,9 @@ class CrawlEngine:
         # Resume-safe like edges/: per-wave overwritten dirs.
         self.trap_guard = trap_guard
         self.trap_thresholds = dict(trap_thresholds or {})
-        # min_urls may arrive via either knob; the dict wins, and unknown
-        # keys fail HERE, not mid-crawl after a wave's work is done
-        self.trap_min_urls = self.trap_thresholds.pop(
-            "min_urls", trap_min_urls
-        )
+        # unknown keys fail HERE, not mid-crawl after a wave's work is done
         _allowed = {
+            "min_urls",
             "max_urls_per_content",
             "max_avg_depth",
             "max_repeat_seg_share",
@@ -177,8 +175,6 @@ class CrawlEngine:
             raise TypeError(
                 f"unknown dust_thresholds keys: {sorted(d_unknown)}"
             )
-        self.dust_thresholds.setdefault("min_support", 2)
-        self.dust_thresholds.setdefault("min_precision", 0.9)
         # Soft-404 guard (operators/soft404.py): every newly-seen frontier
         # host gets ONE deterministic cannot-exist probe URL scheduled as
         # an ordinary frontier row; a host that answers it 200 has its
@@ -263,7 +259,6 @@ class CrawlEngine:
         # hot-host politeness sort to salt×budget rows per host at 10^10.
         self.politeness_salt = politeness_salt
         self.verbose = verbose
-        self.broadcast_fetch_max = broadcast_fetch_max
         # Row-level fetch retry (reference: 3 tries w/ backoff,
         # /root/reference/src/crawlers/base.py:16-45). A scheduled url whose
         # fetch misses is re-enqueued with attempt+1 instead of being marked
@@ -290,6 +285,27 @@ class CrawlEngine:
         )
 
     # ---------------------------------------------------------------- state
+    def _seen_params(self) -> dict:
+        return {
+            "n_buckets": self.n_buckets,
+            "bloom_bits": self.bloom_bits,
+            "cuckoo_rows": self.cuckoo_rows,
+        }
+
+    def _check_resume(self, m: Manifest) -> None:
+        """A resumed crawl must read its checkpointed seen-set the way it
+        was written: the mode picks the state format, and ``bucket`` =
+        f(url_hash, n_buckets) plus the filter size pick the bits a URL
+        maps to — a mismatch would report seen URLs as unseen."""
+        was = {"seen_mode": m.seen_mode, **(m.seen_params or {})}
+        now = {"seen_mode": self.seen_mode, **self._seen_params()}
+        diff = {k: (was[k], now[k]) for k in was if was[k] != now[k]}
+        if diff:
+            raise ValueError(
+                f"crawl checkpoint {self.dir} was written with different "
+                f"seen-set settings (checkpoint, engine): {diff}"
+            )
+
     def _new_seen(self):
         if self.seen_mode == "bloom":
             return BloomSeenSet(
@@ -366,6 +382,8 @@ class CrawlEngine:
         after a crash never double-extracts a committed wave.
         """
         m = read_manifest(self.dir)
+        if m is not None:
+            self._check_resume(m)
         # Scope sets derive from the seed list (tiny by construction) —
         # computed once per run; resume passes the same seeds, so a
         # resumed crawl filters by the identical scope.
@@ -437,7 +455,7 @@ class CrawlEngine:
             # (Fallback for a pathologically large wave: plain shuffled join,
             # AQE picks the strategy.)
             wave_sel = wave_rows.select("url_canon", "host", "priority", "depth")
-            if n_sched <= self.broadcast_fetch_max:
+            if n_sched <= BROADCAST_FETCH_MAX:
                 fetched = self.pages.join(
                     F.broadcast(wave_sel), "url_canon", "inner"
                 )
@@ -787,7 +805,6 @@ class CrawlEngine:
                             url_col="url_canon",
                             digest_col="digest",
                         ),
-                        min_urls=self.trap_min_urls,
                         **self.trap_thresholds,
                     )
                     .filter(F.col("is_trap_suspect"))
@@ -907,6 +924,7 @@ class CrawlEngine:
                         for r in lineage_rows
                     ],
                     waves_done=waves_done,
+                    seen_params=self._seen_params(),
                 ),
             )
             listings.unpersist()

@@ -192,7 +192,7 @@ class IncrementalRollup:
             ).select(*state_cols)
             merged = merged.persist()
             n = merged.count()
-            self.catalog.append(self.dst, merged, rows=n)
+            self.catalog.append(self.dst, merged)
             merged.unpersist()
             partial.unpersist()
         return {

@@ -16,7 +16,11 @@ a real Iceberg catalog by replacing these four methods with
   ``read_changes(table, since)`` is the incremental scan (only the files
   appended after ``since``) — both resolved purely from manifest history,
   no data listing.
-- per-snapshot lineage: row counts and added-file list per commit.
+- per-snapshot lineage: row counts and added-file list per commit. A
+  commit's row count and column stats both come from the parquet footers
+  of the files it adds (read once, driver-side) — no Spark job re-counts
+  what was just written; a part file whose footer cannot be read fails
+  the commit.
 - **schema evolution** (add-column): every commit records its write schema in
   the manifest; ``read`` projects the metadata-resolved schema onto the files
   (older files return NULL for later-added columns) instead of
@@ -157,15 +161,18 @@ class TableCatalog:
         return (m["snapshot"], len(m["history"]))
 
     def _commit(
-        self, table: str, manifest: dict, expect: tuple[int, int] | None = None
+        self, table: str, manifest: dict, expect: tuple[int, int]
     ) -> None:
-        """Atomically publish the manifest. With ``expect`` (the version the
-        writer loaded), this is a compare-and-swap under a per-table file
+        """Atomically publish the manifest as a compare-and-swap against
+        ``expect`` (the version the writer loaded), under a per-table file
         lock — the optimistic-concurrency commit Iceberg runs against its
         catalog: writers never block each other during data writes (the
         expensive part), and a lost race costs one metadata retry, not a
         data rewrite. Raises CommitConflict if another writer got there
         first."""
+        import fcntl
+        import time as _time
+
         os.makedirs(self._tdir(table), exist_ok=True)
         # commit-time stamp: every op appends exactly ONE history entry
         # before funneling through here, so the last entry is this commit's
@@ -173,19 +180,9 @@ class TableCatalog:
         # unstamped entries — a manifest written before stamping existed —
         # stay unstamped: honestly unresolvable by snapshot_as_of instead
         # of all acquiring today's time and resolving WRONG.
-        import time as _time
-
         hist = manifest.get("history", [])
         if hist:
             hist[-1].setdefault("ts", _time.time())
-        if expect is None:
-            tmp = self._manifest_path(table) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f, indent=1)
-            os.replace(tmp, self._manifest_path(table))
-            return
-        import fcntl
-
         lockp = os.path.join(self._tdir(table), ".commit.lock")
         with open(lockp, "w") as lk:
             fcntl.flock(lk, fcntl.LOCK_EX)
@@ -201,16 +198,16 @@ class TableCatalog:
             os.replace(tmp, self._manifest_path(table))
 
     def _write_data(
-        self, table: str, df: DataFrame, snapshot: int, rows: int | None = None
+        self, table: str, df: DataFrame, snapshot: int
     ) -> tuple[list[str], int, dict]:
+        """Write ``df`` as a new data dir; returns (files, rows, stats) with
+        the row count summed from the footers the stats fold reads."""
         dirname = f"{snapshot:06d}-{uuid.uuid4().hex[:8]}"
         out = os.path.join(self._tdir(table), "data", dirname)
         df.write.mode("overwrite").parquet(out)
-        # callers that already know the row count (e.g. they just counted
-        # the frame) skip the verification re-read — one job per commit
-        n = self.spark.read.parquet(out).count() if rows is None else rows
         rel = os.path.join("data", dirname)
-        return [rel], n, self._collect_file_stats(out, rel)
+        fstats = self._collect_file_stats(out, rel)
+        return [rel], sum(s["rows"] for s in fstats.values()), fstats
 
     def _collect_file_stats(self, out_dir: str, rel_dir: str) -> dict:
         """Fold each written part-file's parquet footer into
@@ -220,19 +217,15 @@ class TableCatalog:
         every later scan prunes from the manifest without touching storage
         (Iceberg's manifest-stats contract, the core of its 100-TB scan
         planning). Columns whose stats are absent or unordered (nested,
-        NaN-polluted floats) are simply omitted → never pruned on."""
-        try:
-            import pyarrow.parquet as pq
-        except Exception:  # pragma: no cover - pyarrow ships in this env
-            return {}
+        NaN-polluted floats) are simply omitted → never pruned on. An
+        unreadable footer raises: the commit's row count would be short."""
+        import pyarrow.parquet as pq
+
         stats: dict = {}
         for fn in sorted(os.listdir(out_dir)):
             if not fn.endswith(".parquet"):
                 continue
-            try:
-                md = pq.ParquetFile(os.path.join(out_dir, fn)).metadata
-            except Exception:
-                continue
+            md = pq.ParquetFile(os.path.join(out_dir, fn)).metadata
             cols: dict = {}
             rows = md.num_rows
             for rg_i in range(md.num_row_groups):
@@ -375,9 +368,6 @@ class TableCatalog:
                     fields[f.name] = T.StructField(old.name, old.dataType, True)
         return T.StructType(list(fields.values())) if fields else None
 
-    def _check_write_schema(self, m: dict, df: DataFrame, table: str) -> None:
-        self._check_schema_compat(m, df.schema, table)
-
     def _check_schema_compat(self, m: dict, schema, table: str) -> None:
         """Add-column evolution only: a written column that already exists
         must keep its exact dataType (Iceberg would also allow widening
@@ -400,7 +390,6 @@ class TableCatalog:
         self,
         table: str,
         df: DataFrame,
-        rows: int | None = None,
         cluster_by: list[str] | None = None,
         cluster_partitions: int | None = None,
         zorder_by: list[str] | None = None,
@@ -410,14 +399,6 @@ class TableCatalog:
     ) -> int:
         """Append rows as a new snapshot; readers see them only after the
         manifest commit. Returns the new snapshot id.
-
-        ``rows`` contract: pass it ONLY when it is the exact count of this
-        ``df`` as written — i.e. ``df`` is persisted (or deterministic) and
-        ``rows`` came from counting it, with no transformation in between.
-        It is recorded verbatim into the snapshot lineage; a stale or
-        recomputed-lineage count would silently corrupt the history the
-        catalog exists to provide. Omit it to have the catalog verify by
-        re-reading what was written.
 
         ``cluster_by=[cols]`` range-partitions and sorts the write on those
         columns (Iceberg's write-ordered/clustered table): each part file
@@ -437,7 +418,7 @@ class TableCatalog:
         untrusted batches: a crawl wave is staged, validated, then
         published, and a bad wave never becomes visible at all."""
         m = self._load_manifest(table)
-        self._check_write_schema(m, df, table)
+        self._check_schema_compat(m, df.schema, table)
         if zorder_by and cluster_by:
             raise ValueError("zorder_by and cluster_by are exclusive")
         if zorder_by:
@@ -446,8 +427,7 @@ class TableCatalog:
             # gives the LEADING column selective file stats; the
             # bit-interleaved key preserves locality in every listed
             # dimension, so min/max skipping has teeth on each of them.
-            # Costs one min/max agg pass over df (same determinism
-            # caveat as the ``rows`` contract) + the clustering shuffle.
+            # Costs one min/max agg pass over df + the clustering shuffle.
             key = zorder_key(df, zorder_by, bits=zorder_bits)
             df = df.withColumn("_zkey", key)
             df = (
@@ -466,9 +446,7 @@ class TableCatalog:
         # data written once; only the metadata fold re-runs on a lost commit
         # race (concurrent appenders to one table are valid — each publishes
         # its own snapshot, CAS-ordered)
-        new_files, n, fstats = self._write_data(
-            table, df, m["snapshot"] + 1, rows
-        )
+        new_files, n, fstats = self._write_data(table, df, m["snapshot"] + 1)
         schema_json = df.schema.json()
         for _ in range(100):
             expect = self._version_of(m)
@@ -494,7 +472,7 @@ class TableCatalog:
                 return snap
             except CommitConflict:
                 m = self._load_manifest(table)
-                self._check_write_schema(m, df, table)
+                self._check_schema_compat(m, df.schema, table)
         raise CommitConflict(
             f"table {table!r}: append lost 100 consecutive commit races"
         )
@@ -696,11 +674,9 @@ class TableCatalog:
         rows (rewritten dirs stay on disk until ``vacuum``); incremental
         reads across a merge raise, as for ``replace`` — a merge rewrites
         history, it is not an append."""
-        from pyspark.sql import functions as F
-
         m = self._load_manifest(table)
         expect = self._version_of(m)
-        self._check_write_schema(m, updates, table)
+        self._check_schema_compat(m, updates.schema, table)
         cur_files = m["files"]
         # the updates frame is evaluated in three separate jobs (bounds
         # agg, isEmpty, final write) — pin it so a nondeterministic input
@@ -750,12 +726,7 @@ class TableCatalog:
         untouched = [f for f in cur_files if f not in set(touched)]
         if touched:
             paths = [os.path.join(self._tdir(table), f) for f in touched]
-            schema = self._schema_as_of(m)
-            old = (
-                self.spark.read.schema(schema).parquet(*paths)
-                if schema is not None
-                else self.spark.read.parquet(*paths)
-            )
+            old = self.spark.read.schema(self._schema_as_of(m)).parquet(*paths)
             survivors = old.join(
                 updates.select(*keys).distinct(), keys, "left_anti"
             )
@@ -973,35 +944,34 @@ class TableCatalog:
             snapshot = self.snapshot_as_of(table, as_of)
         m = self._load_manifest(table)
         files = m["files"] if snapshot is None else self._files_at(m, snapshot)
+        return self._scan(table, m, files, snapshot, where)
+
+    def _scan(
+        self,
+        table: str,
+        m: dict,
+        files: list[str],
+        snapshot: int | None,
+        where,
+    ) -> DataFrame:
+        """Scan behind ``read`` and ``read_changes``: prune ``files`` by
+        manifest stats, read the survivors with the schema as of
+        ``snapshot`` (older files read later-added columns as NULL; no
+        mergeSchema footer listing), then apply ``where`` exactly. No
+        surviving file → a typed empty frame."""
         schema = self._schema_as_of(m, snapshot)
-        if not files:
-            if schema is not None:
-                return self._residual_filter(
-                    self.spark.createDataFrame([], schema), where
-                )
+        if schema is None:
             raise FileNotFoundError(
                 f"table {table} has no committed snapshot"
                 + (f" at version {snapshot}" if snapshot is not None else "")
             )
         rel_paths, _ = self._select_files(m, files, where)
-        if not rel_paths:  # every part pruned: statically empty
-            if schema is not None:
-                return self._residual_filter(
-                    self.spark.createDataFrame([], schema), where
-                )
-            base = self.spark.read.parquet(
-                *[os.path.join(self._tdir(table), f) for f in files]
-            ).limit(0)
-            return self._residual_filter(base, where)
-        paths = [os.path.join(self._tdir(table), f) for f in rel_paths]
-        if schema is not None:
-            # metadata-resolved schema projection: files written before an
-            # add-column read the new column as NULL; files written after a
-            # time-travel target drop columns the target never had. No
-            # mergeSchema footer listing — O(1) planning, not O(files).
-            df = self.spark.read.schema(schema).parquet(*paths)
+        if rel_paths:
+            df = self.spark.read.schema(schema).parquet(
+                *[os.path.join(self._tdir(table), f) for f in rel_paths]
+            )
         else:
-            df = self.spark.read.parquet(*paths)  # pre-evolution manifests
+            df = self.spark.createDataFrame([], schema)
         return self._residual_filter(df, where)
 
     def read_changes(
@@ -1036,26 +1006,7 @@ class TableCatalog:
                     # discard/create add nothing
                     continue
                 added += h.get("added", [])
-        schema = self._schema_as_of(m, hi)
-        if not added:
-            if schema is not None:
-                return self._residual_filter(
-                    self.spark.createDataFrame([], schema), where
-                )
-            return self._residual_filter(self.read(table).limit(0), where)
-        rel_paths, _ = self._select_files(m, added, where)
-        if not rel_paths:
-            if schema is not None:
-                return self._residual_filter(
-                    self.spark.createDataFrame([], schema), where
-                )
-            return self._residual_filter(self.read(table).limit(0), where)
-        paths = [os.path.join(self._tdir(table), f) for f in rel_paths]
-        if schema is not None:
-            df = self.spark.read.schema(schema).parquet(*paths)
-        else:
-            df = self.spark.read.parquet(*paths)
-        return self._residual_filter(df, where)
+        return self._scan(table, m, added, until, where)
 
     def rollback(self, table: str, snapshot: int) -> int:
         """Restore the table to ``snapshot``'s state as a NEW commit
@@ -1149,16 +1100,11 @@ class TableCatalog:
             )
         ext = self.spark.read.parquet(src)
         fstats = self._collect_file_stats(src, src)
-        # row count from the footers just statted — no Spark count job
-        rows = (
-            sum(s["rows"] for s in fstats.values())
-            if fstats
-            else ext.count()
-        )
+        rows = sum(s["rows"] for s in fstats.values())
         m = self._load_manifest(table)
         for _ in range(100):
             if mode != "replace":  # replace may redefine the schema outright
-                self._check_write_schema(m, ext, table)
+                self._check_schema_compat(m, ext.schema, table)
             if any(src in h.get("added", []) for h in m["history"]):
                 raise ValueError(
                     f"add_files: {src!r} is already imported into table "

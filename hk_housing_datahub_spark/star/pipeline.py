@@ -133,7 +133,7 @@ def _append_deduped(
             n = fresh.count()
             if n:
                 catalog.append(
-                    table, fresh, rows=n, cluster_by=ck, cluster_partitions=cp
+                    table, fresh, cluster_by=ck, cluster_partitions=cp
                 )
         finally:
             fresh.unpersist()
@@ -158,7 +158,7 @@ def _append_deduped(
         n = bloom.update(table, fresh.select(*pk), pk)
         if n:
             catalog.append(
-                table, fresh, rows=n, cluster_by=ck, cluster_partitions=cp
+                table, fresh, cluster_by=ck, cluster_partitions=cp
             )
     finally:
         probed.unpersist()

@@ -92,7 +92,6 @@ def ingest_corpus_batch(
             catalog.append(
                 table,
                 fresh,
-                rows=n,
                 extra={"batch_id": int(batch_id), "sink_id": sink_id},
             )
         return n

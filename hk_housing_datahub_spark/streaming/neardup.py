@@ -255,7 +255,6 @@ def ingest_neardup_batch(
                 catalog.append(
                     sigs_tbl,
                     kept_sigs.withColumn("bid", F.lit(int(batch_id)).cast("bigint")),
-                    rows=n_kept,
                     extra=stamp,
                 )
             if batch_id not in _committed_batches(catalog, bands_tbl, sink_id):
@@ -266,13 +265,12 @@ def ingest_neardup_batch(
                     ).withColumn(
                         "bid", F.lit(int(batch_id)).cast("bigint")
                     ),
-                    rows=n_kept * bands,
                     extra=stamp,
                 )
             survivors = local.join(
                 keep_ids.withColumnRenamed("did", id_col), id_col, "left_semi"
             )
-            catalog.append(table, survivors, rows=n_kept, extra=stamp)
+            catalog.append(table, survivors, extra=stamp)
         kept_sigs.unpersist()
         return n_kept
     finally:

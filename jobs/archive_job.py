@@ -260,7 +260,7 @@ def main() -> None:
             )
             # intent first (see the exactly-once note above)
             try:
-                cat.append("recrawl_stats_waves", wave_row, rows=1)
+                cat.append("recrawl_stats_waves", wave_row)
             except FileNotFoundError:
                 cat.replace("recrawl_stats_waves", wave_row)
         out["stats_snapshot"] = cat.replace("recrawl_stats", stats)

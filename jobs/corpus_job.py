@@ -200,7 +200,6 @@ def main() -> None:
     snap = cat.append(
         args.output_table,
         corpus,
-        rows=stats.docs_out,
         cluster_by=["bucket", "bin_id"],
     )
     out = {

@@ -6,6 +6,7 @@ a mid-crawl checkpoint to the identical final state.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import tempfile
@@ -88,6 +89,39 @@ def test_resume_midcrawl_reaches_identical_state(spark, corpus, sim_result):
         eng2 = CrawlEngine(spark, pages, robots, tmp, wave_ms=1000, max_depth=2)
         res = eng2.run(seeds, max_waves=2)
         assert _schedule(spark, res) == sorted(sim_result.schedule)
+    finally:
+        shutil.rmtree(tmp)
+
+
+def test_resume_with_other_seen_settings_raises(spark, corpus):
+    """The checkpointed seen-set is only valid under the settings that
+    built it: bucket = f(url_hash, n_buckets), so a bloom crawl resumed at
+    another bucket count would probe the wrong filters and schedule seen
+    URLs again. The resume refuses before it touches any state."""
+    pages, seeds, robots = corpus
+    tmp = tempfile.mkdtemp(prefix="crawl_resume_cfg_")
+
+    def engine(**kw):
+        return CrawlEngine(
+            spark, pages, robots, tmp, wave_ms=1000, max_depth=2, **kw
+        )
+
+    try:
+        engine(seen_mode="bloom", n_buckets=16).run(seeds, max_waves=1)
+        with pytest.raises(ValueError, match="n_buckets"):
+            engine(seen_mode="bloom", n_buckets=32).run(seeds, max_waves=1)
+        with pytest.raises(ValueError, match="seen_mode"):
+            engine(seen_mode="exact", n_buckets=16).run(seeds, max_waves=1)
+        # a manifest written before the settings were recorded still
+        # resumes under the settings that match it
+        mp = os.path.join(tmp, "manifest.json")
+        with open(mp) as f:
+            m = json.load(f)
+        del m["seen_params"]
+        with open(mp, "w") as f:
+            json.dump(m, f)
+        res = engine(seen_mode="bloom", n_buckets=16).run(seeds, max_waves=1)
+        assert res.waves_run == 2
     finally:
         shutil.rmtree(tmp)
 

@@ -88,12 +88,11 @@ def test_ingest_neardup_replay_and_torn_batch_heal(spark, tmp_path):
     sigs = _sig_array(b1, "doc_id", "text", 3, 64)
     stamp = {"batch_id": 1, "sink_id": "neardup"}
     cat.append(
-        "docs_lshsigs", sigs.withColumn("bid", F.lit(1).cast("bigint")), rows=4, extra=stamp
+        "docs_lshsigs", sigs.withColumn("bid", F.lit(1).cast("bigint")), extra=stamp
     )
     cat.append(
         "docs_lshbands",
         _band_index(sigs, 32, 64).withColumn("bid", F.lit(1).cast("bigint")),
-        rows=4 * 32,
         extra=stamp,
     )
     # replay of batch 1: its own torn state rows must NOT convict it —

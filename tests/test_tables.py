@@ -697,3 +697,58 @@ def test_zorder_rejects_strings_and_cluster_combo(spark, cat):
         cat.append("t", df, zorder_by=["s"])
     with pytest.raises(ValueError):
         cat.append("t", df, zorder_by=["id"], cluster_by=["id"])
+
+
+def test_every_write_records_the_rows_it_added(spark, cat):
+    """Each commit's ``rows`` equals the rows in the files it added, for
+    every writing op, so the lineage folds into the exact live count."""
+    import os as _os
+
+    ext = tempfile.mkdtemp(prefix="ext_rows_")
+    try:
+        spark.range(100, 107).repartition(2).write.mode("overwrite").parquet(ext)
+
+        def check(op):
+            h = cat.history("t")[-1]
+            assert h["op"] == op
+            paths = [_os.path.join(cat._tdir("t"), d) for d in h["added"]]
+            assert h["rows"] == spark.read.parquet(*paths).count(), op
+            assert cat.describe("t")["rows"] == cat.read("t").count(), op
+
+        cat.append("t", spark.range(0, 10).repartition(3))
+        check("append")
+        cat.append("t", spark.range(10, 25))
+        check("append")
+        cat.merge_upsert("t", spark.range(20, 30), keys=["id"])
+        check("merge")
+        cat.compact("t", partitions=2)
+        check("compact")
+        cat.add_files("t", ext)
+        check("append")
+        assert cat.read("t").count() == 37
+        cat.replace("t", spark.range(0, 4))
+        check("replace")
+    finally:
+        shutil.rmtree(ext)
+
+
+def test_add_files_unreadable_footer_commits_nothing(spark, cat):
+    """A part file whose footer cannot be read fails the import instead of
+    committing the readable files' rows as the whole directory's."""
+    import os as _os
+
+    import pyarrow as pa
+
+    src = tempfile.mkdtemp(prefix="ext_bad_")
+    try:
+        cat.append("t", spark.range(0, 5))
+        before = cat._load_manifest("t")
+        spark.range(10, 20).coalesce(1).write.mode("overwrite").parquet(src)
+        with open(_os.path.join(src, "part-zzz.parquet"), "wb") as f:
+            f.write(b"not a parquet file")
+        with pytest.raises(pa.ArrowInvalid):
+            cat.add_files("t", src)
+        assert cat._load_manifest("t") == before
+        assert cat.read("t").count() == 5
+    finally:
+        shutil.rmtree(src)

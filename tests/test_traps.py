@@ -131,7 +131,7 @@ def test_trap_guard_stops_the_trap_tail(spark, tmp_path):
     base = crawl("noguard")
     assert base[(1, "trap.com")] == 25
 
-    guarded = crawl("guard", trap_guard=True, trap_min_urls=20)
+    guarded = crawl("guard", trap_guard=True)
     # wave 0 is identical (the guard reacts to observed captures) ...
     assert guarded[(0, "trap.com")] == 25
     assert guarded[(0, "ok.com")] == 25
